@@ -531,5 +531,6 @@ def test_prepare_training_corpus_tokenizer_knob(spark, sf_dir, tmp_path):
         .select("doc_id")
         .collect()
     )
+    release_components(clusters)  # the collect above was the last action
     got = sorted(r.doc_id for r in back.collect())
     assert got == want

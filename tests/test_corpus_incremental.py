@@ -53,6 +53,10 @@ def _batch_over_union(spark, docs_df, out_dir, **knobs):
     return stats, kept
 
 
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
 def _rows(df):
     return sorted(map(tuple, df.select("doc_id", "text", "lang", "source").collect()))
 
@@ -221,8 +225,9 @@ def test_wave_dirs_are_immutable_after_later_waves(spark, tmp_path):
 def test_no_leaked_persisted_rdds(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     w1 = spark.createDataFrame([_doc(1, TEXT_A), _doc(2, TEXT_D)], DOC_SCHEMA)
+    before = _persisted_rdd_ids(spark)
     ingest_corpus_wave(spark, w1, corpus, 0)
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
+    assert _persisted_rdd_ids(spark) == before
 
 
 def test_reference_frame_drift_refused(spark, tmp_path):

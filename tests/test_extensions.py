@@ -113,9 +113,10 @@ def test_lloyd_unpersists_cache(spark):
             "features"
         )
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted())
     core.lloyd(df, core.KMeansParams(k=2, seed=3, max_loop=3))
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().size() == 0
+    assert set(persisted()) == before
 
 
 def test_write_centroids_float32_shortest_repr(tmp_path):

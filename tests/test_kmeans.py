@@ -4,12 +4,14 @@
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from kmeanwithmapreduce_spark.kmeans import core
+from test_compat_customerdata import CUSTOMER_DATA
 
 
 def _numpy_lloyd(x, init, thresh, max_rounds, round5=False):
@@ -193,6 +195,9 @@ def test_lloyd_on_lineitem_projection(spark, sf_dir):
     assert math.isfinite(dbi)
 
 
+@pytest.mark.skipif(
+    not os.path.exists(CUSTOMER_DATA), reason="reference dataset not present"
+)
 def test_sweep_selects_lowest_dbi(spark):
     """The reference's docx §4.3 experiment shape: sweep k, fit per k,
     pick lowest DBI. Small range + loop cap keeps it fast; the selection
@@ -202,7 +207,7 @@ def test_sweep_selects_lowest_dbi(spark):
     from kmeanwithmapreduce_spark.kmeans.sweep import sweep
     from kmeanwithmapreduce_spark.sources.readers import load_points_csv
 
-    df = load_points_csv(spark, "/root/reference/Data/CustomerData.txt", dim=7)
+    df = load_points_csv(spark, CUSTOMER_DATA, dim=7)
     out = sweep(df, [2, 3, 4], thresh=0.01, max_loop=8, seed=42, mode="compat")
     assert set(out["results"]) == {2, 3, 4}
     for r in out["results"].values():
