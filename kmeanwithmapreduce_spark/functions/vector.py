@@ -105,15 +105,22 @@ def nearest_centroid_expr(
 # --------------------------------------------------------------------------
 # SQL-text twins of the expression builders above.
 #
-# Building a k x d literal distance tree through the Column API costs
-# thousands of py4j round-trips (~0.7 s per call at k=8, d=64 —
-# measured round 13); inside lloyd that bill recurs EVERY iteration
-# because the centroid literals change. Rendering the same expression
-# as ONE SQL string parsed JVM-side by F.expr() produces the identical
-# Catalyst tree (same functions, same double literals via repr + 'D',
-# same int literals and casts — pinned by test_vector_sql_twins and
-# every golden oracle) for one round-trip. Keep the Column forms for
-# composability; route hot, repeated construction through these.
+# Building a k x d distance tree through the Column API costs thousands
+# of py4j round-trips (~0.7 s per call at k=8, d=64 — measured round
+# 13), and lloyd builds one EVERY iteration. Rendering the same
+# expression as ONE SQL string parsed JVM-side by F.expr() gives the
+# same functions, casts and term order for one round-trip.
+#
+# The assign twin does not write the centroids into its text: they come
+# in as ONE array value (a scalar subquery over
+# ``centroids_values_sql``, projected once into a helper column by
+# ``kmeans.core``) that the terms index by position. Whole-stage codegen
+# passes an array value to the generated class as a reference object,
+# where double literals are inlined as source text — so the generated
+# code depends only on (k, d, column) and every Lloyd iteration after
+# the first reuses the cached, JIT-warmed class instead of compiling
+# new source. Values are pinned bit-identical to the Column builders by
+# test_vector_sql_twins and every golden oracle.
 
 
 def quote_ident(name: str) -> str:
@@ -146,40 +153,59 @@ def _centroid_sql(centroid: Sequence[float]) -> str:
     return "array(" + ",".join(_sql_double(v) for v in centroid) + ")"
 
 
-def squared_euclidean_sql(a_sql: str, centroid: Sequence[float]) -> str:
-    """SQL text of squared_euclidean_expr(a, lit(centroid))."""
+def _zip_squared_sql(a_sql: str, b_sql: str) -> str:
     return (
-        f"aggregate(zip_with({a_sql}, {_centroid_sql(centroid)}, "
+        f"aggregate(zip_with({a_sql}, {b_sql}, "
         "(x, y) -> power(cast(x as double) - cast(y as double), 2)), "
         "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _squared_dist_unrolled_sql(a_sql: str, centroid: Sequence[float]) -> str:
-    return " + ".join(
-        f"power(cast(element_at({a_sql}, {i + 1}) as double) - "
-        f"{_sql_double(v)}, 2)"
-        for i, v in enumerate(centroid)
-    )
+def squared_euclidean_sql(a_sql: str, centroid: Sequence[float]) -> str:
+    """SQL text of squared_euclidean_expr(a, lit(centroid))."""
+    return _zip_squared_sql(a_sql, _centroid_sql(centroid))
 
 
-def distance_array_sql(
-    a_sql: str, centroids: Sequence[Sequence[float]]
-) -> str:
-    """SQL text of distance_array_expr(a, centroids) — same unroll
-    threshold, same term order."""
-    if centroids and len(centroids[0]) <= _UNROLL_DIM:
-        terms = [_squared_dist_unrolled_sql(a_sql, c) for c in centroids]
+def centroids_values_sql(centroids: Sequence[Sequence[float]]) -> str:
+    """SQL text of a one-row VALUES relation whose one column is the
+    array value that carries ``centroids`` into
+    ``distance_array_ref_sql``: flat row-major ``array<double>`` of k*d
+    values in the unrolled regime (d <= 32), ``array<array<double>>`` of
+    k centroids in the zip_with regime (each term reads its centroid as
+    a view; slicing a flat array would copy it per row)."""
+    if centroids and len(centroids[0]) > _UNROLL_DIM:
+        value = "array(" + ",".join(_centroid_sql(c) for c in centroids) + ")"
     else:
-        terms = [squared_euclidean_sql(a_sql, c) for c in centroids]
+        value = _centroid_sql([v for c in centroids for v in c])
+    return f"VALUES ({value})"
+
+
+def distance_array_ref_sql(a_sql: str, c_sql: str, k: int, d: int) -> str:
+    """SQL text of distance_array_expr(a, centroids), reading the
+    centroids from ``c_sql`` (an expression holding the value of
+    ``centroids_values_sql(centroids)``) — same unroll threshold, same
+    term order, same double arithmetic."""
+    if d <= _UNROLL_DIM:
+        terms = [
+            " + ".join(
+                f"power(cast(element_at({a_sql}, {j + 1}) as double) - "
+                f"element_at({c_sql}, {i * d + j + 1}), 2)"
+                for j in range(d)
+            )
+            for i in range(k)
+        ]
+    else:
+        terms = [
+            _zip_squared_sql(a_sql, f"element_at({c_sql}, {i + 1})")
+            for i in range(k)
+        ]
     return "array(" + ",".join(terms) + ")"
 
 
-def nearest_centroid_sql(
-    a_sql: str, centroids: Sequence[Sequence[float]]
-) -> str:
-    """SQL text of nearest_centroid_expr(a, centroids)."""
-    darr = distance_array_sql(a_sql, centroids)
+def nearest_centroid_ref_sql(a_sql: str, c_sql: str, k: int, d: int) -> str:
+    """SQL text of nearest_centroid_expr(a, centroids), centroids read
+    from ``c_sql`` as in ``distance_array_ref_sql``."""
+    darr = distance_array_ref_sql(a_sql, c_sql, k, d)
     return (
         f"cast((array_position({darr}, array_min({darr})) - 1) as int)"
     )

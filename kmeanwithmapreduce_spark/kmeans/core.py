@@ -3,7 +3,7 @@
 Reference parity map (file:line cites are into /root/reference):
 
 - init sampling       Main.java:129-164   -> seeded distributed takeSample
-- centroid broadcast  Main.java:166-173   -> literal arrays folded into plan
+- centroid broadcast  Main.java:166-173   -> one array value via a scalar subquery
 - assign (argmin)     KMapper.java:29-46  -> nearest_centroid_expr / pandas-UDF
 - partial agg         KCombiner.java:9-18 -> automatic HashAggregate(partial)
 - final mean          KReducer.java:12-26 -> HashAggregate(final) per-dim avg
@@ -222,19 +222,44 @@ def _weighted_kmeanspp(
     return [[float(v) for v in row] for row in c]
 
 
+# helper column carrying the centroid array value through the assign
+# projection; suffixed with "_" until it names no input column
+_CENTROIDS_COL = "__centroids"
+
+
 def _assign_expr_path(
     df: DataFrame, centroids: Sequence[Sequence[float]], features_col: str
 ) -> DataFrame:
     # the SQL-text twin of nearest_centroid_expr: one JVM parse instead
-    # of thousands of py4j round-trips building the k x d literal tree
-    # (which lloyd pays EVERY iteration — round-13 measurement: ~0.7 s
-    # per construction at k=8, d=64). Identical Catalyst tree, pinned
-    # by the golden oracles and test_vector_sql_twins.
-    from ..functions.vector import nearest_centroid_sql, quote_ident
+    # of thousands of py4j round-trips. The centroids enter as ONE array
+    # value — a scalar subquery over a one-row VALUES, projected once —
+    # not as k*d literals, so lloyd's iterations reuse one compiled class
+    # (see the SQL-twin note in functions/vector.py). Identical values,
+    # pinned by the golden oracles and test_vector_sql_twins.
+    from ..functions.vector import (
+        centroids_values_sql,
+        nearest_centroid_ref_sql,
+        quote_ident,
+    )
 
-    return df.withColumn(
-        "cluster",
-        F.expr(nearest_centroid_sql(quote_ident(features_col), centroids)),
+    k = len(centroids)
+    d = len(centroids[0]) if k else 0
+    taken = {c.lower() for c in df.columns}
+    helper = _CENTROIDS_COL
+    while helper.lower() in taken:
+        helper += "_"
+    value = df.sparkSession.sql(centroids_values_sql(centroids)).scalar()
+    return (
+        df.withColumn(helper, value)
+        .withColumn(
+            "cluster",
+            F.expr(
+                nearest_centroid_ref_sql(
+                    quote_ident(features_col), quote_ident(helper), k, d
+                )
+            ),
+        )
+        .drop(helper)
     )
 
 

@@ -11,12 +11,16 @@ cardinalities).
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 from pyspark.sql import functions as F
 
 from kmeanwithmapreduce_spark.operators.dedup import ngram_jaccard_pairs
+
+# the checkout under test; the subprocess scripts import from it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _hot_corpus(spark, n_hot: int, n_dup_pairs: int = 5):
@@ -80,8 +84,8 @@ def test_hot_shingle_links_no_pairs_but_real_dups_survive(spark):
 
 
 _CONSTRAINED = r"""
-import sys
-sys.path.insert(0, "/root/repo")
+import os, sys
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession, functions as F
 
 spark = (
@@ -92,7 +96,7 @@ spark = (
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from test_dedup_hot_shingle import _hot_corpus
 from kmeanwithmapreduce_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -109,12 +113,12 @@ def test_50k_hot_docs_under_constrained_heap(tmp_path):
     driver IS the executor). Count-first capping keeps every buffer
     bounded; the run must complete and emit only the 4 true dup pairs."""
     p = tmp_path / "constrained.py"
-    p.write_text(_CONSTRAINED)
+    p.write_text(f"REPO = {REPO!r}\n" + _CONSTRAINED)
     res = subprocess.run(
         [sys.executable, str(p)],
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert "HOT-SHINGLE-OK" in res.stdout, res.stdout[-2000:] + res.stderr[-3000:]

@@ -4,12 +4,16 @@ a subprocess with a vanilla session."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+# the checkout under test; the subprocess script imports from it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -144,12 +148,12 @@ print("DRIVER-SESSION-OK")
 
 def test_vanilla_driver_session(tmp_path):
     p = tmp_path / "driver_sim.py"
-    p.write_text(SCRIPT)
+    p.write_text(f"REPO = {REPO!r}\n" + SCRIPT)
     res = subprocess.run(
         [sys.executable, str(p)],
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert "DRIVER-SESSION-OK" in res.stdout, res.stdout[-2000:] + res.stderr[-2000:]

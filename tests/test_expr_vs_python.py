@@ -73,14 +73,17 @@ def test_vector_sql_twins_match_column_builders(spark):
     replaces thousands of py4j round-trips in lloyd/pq_encode) must
     produce BIT-IDENTICAL values to the Column builders they twin —
     distances and argmin labels, across both the unrolled (d <= 32)
-    and zip_with (d > 32) regimes, including exact ties."""
+    and zip_with (d > 32) regimes, including exact ties. The twins read
+    the centroids from one array value (a scalar subquery over
+    ``centroids_values_sql``), as kmeans.core's assign path does."""
     from pyspark.sql import functions as F
 
     from kmeanwithmapreduce_spark.functions.vector import (
+        centroids_values_sql,
         distance_array_expr,
-        distance_array_sql,
+        distance_array_ref_sql,
         nearest_centroid_expr,
-        nearest_centroid_sql,
+        nearest_centroid_ref_sql,
     )
 
     rng = random.Random(7)
@@ -93,11 +96,12 @@ def test_vector_sql_twins_match_column_builders(spark):
         cents[-1] = list(cents[0])
         rows.append((list(cents[0]),))
         df = spark.createDataFrame(rows, "features array<double>")
-        got = df.select(
+        value = spark.sql(centroids_values_sql(cents)).scalar()
+        got = df.withColumn("c", value).select(
             distance_array_expr(F.col("features"), cents).alias("dc"),
-            F.expr(distance_array_sql("`features`", cents)).alias("ds"),
+            F.expr(distance_array_ref_sql("`features`", "`c`", k, d)).alias("ds"),
             nearest_centroid_expr(F.col("features"), cents).alias("ac"),
-            F.expr(nearest_centroid_sql("`features`", cents)).alias("as_"),
+            F.expr(nearest_centroid_ref_sql("`features`", "`c`", k, d)).alias("as_"),
         ).collect()
         for r in got:
             assert list(r["dc"]) == list(r["ds"]), (d, k)

@@ -85,6 +85,59 @@ def test_pandas_assign_path_matches_expr_path(spark, points_df):
     assert a == b
 
 
+def test_assign_codegen_is_invariant_to_centroid_values(spark):
+    """The centroids enter assign as one array value, not as literals, so
+    a second assign with new centroid values (same k, d and column) reuses
+    the first one's generated classes: zero new janino compiles. Lloyd's
+    iterations after the first depend on this. Labels still equal the
+    Column builder's row for row."""
+    from kmeanwithmapreduce_spark.functions.vector import nearest_centroid_expr
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    hist = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    rng = np.random.default_rng(11)
+    for k, d in [(3, 4), (2, 40)]:  # unrolled and zip_with regimes
+        df = spark.createDataFrame(
+            [([float(v) for v in row],) for row in rng.random((200, d))],
+            "features array<double>",
+        )
+        first, second = (rng.random((k, d)).tolist() for _ in range(2))
+        core.assign(df, first).select("cluster").collect()
+        before = hist.getCount()
+        got = [r[0] for r in core.assign(df, second).select("cluster").collect()]
+        assert hist.getCount() - before == 0, (k, d)
+        want = df.select(nearest_centroid_expr(F.col("features"), second))
+        assert got == [r[0] for r in want.collect()], (k, d)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_assign_refuses_non_finite_centroid(spark, bad):
+    df = spark.createDataFrame([([0.5, 0.5],)], "features array<float>")
+    with pytest.raises(
+        ValueError,
+        match=rf"^non-finite centroid component {bad!r} — the input data "
+        r"contains NaN/inf features \(the Column-API path would produce NaN "
+        r"distances here; the SQL path refuses instead\)$",
+    ):
+        core.assign(df, [[0.0, 0.0], [1.0, bad]])
+
+
+def test_assign_keeps_user_column_named_like_helper(spark):
+    # the centroid helper column must never clobber or drop an input
+    # column, whatever its case
+    h = core._CENTROIDS_COL
+    df = spark.createDataFrame(
+        [([0.0, 0.0], "a", 1), ([1.0, 1.0], "b", 2)],
+        f"features array<float>, `{h}` string, `{h.upper()}_` int",
+    )
+    got = core.assign(df, [[0.0, 0.0], [1.0, 1.0]])
+    assert got.columns == ["features", h, h.upper() + "_", "cluster"]
+    assert [tuple(r)[1:] for r in got.orderBy("cluster").collect()] == [
+        ("a", 1, 0),
+        ("b", 2, 1),
+    ]
+
+
 def test_lloyd_native_matches_numpy(spark, points_df):
     df, x = points_df
     init = [[0.1] * 4, [0.4] * 4, [0.9] * 4]

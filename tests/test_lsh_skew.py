@@ -11,12 +11,16 @@ conftest session would leak them into every other test."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+# the checkout under test; the subprocess script imports from it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 spark = (
@@ -91,7 +95,7 @@ print("OK", n)
 
 def test_lsh_hot_bucket_5k_under_1g_heap_with_skew_split():
     r = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", f"REPO = {REPO!r}\n" + SCRIPT],
         capture_output=True,
         text=True,
         timeout=900,

@@ -68,7 +68,8 @@ def test_q09_window_single_shuffle(spark, sf_dir):
 
 def test_kmeans_iteration_plan(spark, sf_dir):
     """One K-Means iteration = scan + project(argmin) + partial agg +
-    k-row shuffle + final agg. No join, no extra exchange."""
+    k-row shuffle + final agg. No join, no extra exchange: the centroids
+    ride the plan as one array value via a scalar subquery."""
     from pyspark.sql import functions as F
 
     from kmeanwithmapreduce_spark.kmeans.core import assign
@@ -86,7 +87,7 @@ def test_kmeans_iteration_plan(spark, sf_dir):
     plan = explain_str(agg)
     assert "partial_avg" in plan or "partial_sum" in plan
     assert count_nodes(plan, "Exchange") == 1
-    assert "Join" not in plan  # broadcast-as-literals, not a join
+    assert "Join" not in plan  # one array value via a scalar subquery, not a join
     assert "BatchEvalPython" not in plan  # no Python in the hot path
 
 

@@ -11,9 +11,12 @@ import os
 import subprocess
 import sys
 
+# the checkout under test; the subprocess imports from it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import os
-assert os.getcwd() != "/root/repo", "probe must run away from the repo root"
+assert os.getcwd() != REPO, "probe must run away from the repo root"
 from kmeanwithmapreduce_spark.session import get_spark
 from kmeanwithmapreduce_spark.operators.subword import t13_bpe_subword_stats
 
@@ -33,10 +36,10 @@ def test_mapinpandas_entry_runs_with_cwd_outside_repo(tmp_path):
     # the repo reaches the DRIVER via PYTHONPATH (as when the script
     # path, not the cwd, supplies it); executors must get the package
     # from the shipped zip, not from the driver's cwd
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = REPO
     env["SPARK_GRAFT_CPUS"] = "2"
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", f"REPO = {REPO!r}\n" + SCRIPT],
         cwd=str(tmp_path),
         env=env,
         capture_output=True,

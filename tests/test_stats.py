@@ -26,6 +26,9 @@ from kmeanwithmapreduce_spark.sources.table import (
     write_snapshot,
 )
 
+# the checkout under test; the subprocess script imports from it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
@@ -455,7 +458,7 @@ def test_footer_harvest_tz_hostile_parity():
 
     script = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 import datetime, os, tempfile
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -503,7 +506,7 @@ print("TZ_HOSTILE_OK")
 """
     env = dict(os.environ, TZ="America/New_York")
     r = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", f"REPO = {REPO!r}\n" + script],
         capture_output=True,
         text=True,
         env=env,
