@@ -5,16 +5,17 @@
   lineitem at sf0.001, returning the centroid table.
 - ``queries()``: every implemented operator from SURVEY §2 (relational
   Part B + training-data-pipeline extensions + windowed events +
-  K-Means itself). The FIRST 50 entries are the frozen driver
-  CORRECTNESS window (unchanged since round 2); round-5/6 extensions
-  register after k03 (positions 51+, append-only, order-pinned in
-  tests/test_cleaning.py) and are oracle-verified by the in-repo parity
-  sweep — cleaning/curation (c01-c14), advanced aggregates (j05),
-  IVF-PQ search (s04/s05), sketches (t08-t12), temporal/sequence/graph
-  analytics (q31-q43, g01), BM25 (s06), audit/profiling (v01),
-  BPE subword stats (t13), versioned-table time travel (v02),
-  real media decode (m04 PNG / m05 WAV / m06 AVI / m07 baseline JPEG),
-  and the bucketed MERGE-upsert table (v03).
+  K-Means itself), as a view of ``_entries()``: one ordered table of
+  ``(fn, oracle_sql)`` rows, each named by its function. The FIRST 50
+  rows are the frozen driver CORRECTNESS window (unchanged since round
+  2); later rows are append-only (the full order is pinned by
+  tests/test_entry_contract.py::test_registry_order_is_frozen) and are
+  oracle-verified by the in-repo parity sweep — cleaning/curation
+  (c01-c14), advanced aggregates (j05), IVF-PQ and ANN search
+  (s04-s09), sketches (t08-t12), temporal/sequence/graph analytics
+  (q31-q43, g01), audit/profiling (v01), subword stats (t13-t15),
+  versioned and bucketed tables (v02-v07) and real media decode
+  (m04-m09).
 - ``oracle_sql()``: DuckDB-equivalent SQL for each SQL-expressible
   query, plus golden-row VALUES oracles for the deterministic iterative
   pipelines — every registered entry carries one. k02/t06/m03/s03 all use the same recipe: fully
@@ -118,7 +119,7 @@ def k01_kmeans_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def k02_kmeans_compat_customer_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
+def k02_kmeans_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compat-mode K-Means (reference quirks: 5-dp half-up float32 mean
     rounding, max_loop-1 cap) with fixed injected init centroids, on the
     normalized [0,1] embedding prefix — the CustomerData-shaped case."""
@@ -290,35 +291,150 @@ def entry(spark: SparkSession) -> DataFrame:
     return k01_kmeans_lineitem(spark, SF001)
 
 
+def _entries() -> tuple[tuple[Callable[[SparkSession, str], DataFrame], str], ...]:
+    """The registry: one ``(fn, oracle_sql)`` row per entry, in the order
+    the driver sees. The operator modules load here, not at import, so
+    ``import __spark_entry__`` loads only pyspark."""
+    from kmeanwithmapreduce_spark.operators import (
+        ann_index,
+        cleaning,
+        curation,
+        dedup,
+        graph,
+        joins_advanced,
+        multimodal,
+        pq,
+        profiling,
+        quality,
+        relational,
+        scd,
+        search,
+        sequences,
+        similarity,
+        sketch,
+        subword,
+        temporal,
+        textops,
+        versioning,
+        windows_batch,
+    )
+
+    return (
+        # 1-50: the driver's CORRECTNESS window, frozen since round 2
+        (relational.q01_pricing_summary, relational.Q01_SQL),
+        (relational.q03_shipping_priority, relational.Q03_SQL),
+        (relational.q05_local_supplier_volume, relational.Q05_SQL),
+        (relational.q06_forecast_revenue, relational.Q06_SQL),
+        (relational.q07_rollup_region_nation_year, relational.Q07_SQL),
+        (relational.q08_cube_grouping_sets, relational.Q08_SQL),
+        (relational.q09_topk_parts_per_brand, relational.Q09_SQL),
+        (relational.q10_running_total, relational.Q10_SQL),
+        (relational.q12_semi_anti_battery, relational.Q12_SQL),
+        (relational.q13_setops_battery, relational.Q13_SQL),
+        (relational.q14_distinct_parts_per_supplier, relational.Q14_SQL),
+        (relational.q15_conditional_null_agg, relational.Q15_SQL),
+        (relational.q16_string_regex_funcs, relational.Q16_SQL),
+        (relational.q17_monthly_trend, relational.Q17_SQL),
+        (relational.q18_json_props, relational.Q18_SQL),
+        (relational.q19_sessionization, relational.Q19_SQL),
+        (relational.q20_pivot_unpivot, relational.Q20_SQL),
+        (relational.q21_custdist, relational.Q21_SQL),
+        (relational.q22_correlated_subqueries, relational.Q22_SQL),
+        (relational.q24_quantiles_stats, relational.Q24_SQL),
+        (relational.q28_full_outer, relational.Q28_SQL),
+        (relational.q30_posexplode_embedding_dims, relational.Q30_SQL),
+        (textops.t01_doc_stats, textops.T01_SQL),
+        (textops.t02_quality_score, textops.T02_SQL),
+        (textops.t03_language_id, textops.T03_SQL),
+        (textops.t04_fingerprint, textops.T04_SQL),
+        (textops.t05_tfidf_top_terms, textops.T05_SQL),
+        (textops.t07_tfidf_hashed_features, textops.T07_SQL),
+        (textops.t06_tfidf_kmeans, textops.T06_SQL),
+        (dedup.d01_exact_dedup, dedup.D01_SQL),
+        (dedup.d02_ngram_jaccard_pairs, dedup.D02_SQL),
+        (dedup.d03_minhash_lsh_pairs, dedup.D03_SQL),
+        (dedup.d04_simhash, dedup.D04_SQL),
+        (dedup.d05_embedding_neardup_pairs, dedup.D05_SQL),
+        (similarity.s01_knn_bruteforce, similarity.S01_SQL),
+        (similarity.s02_lsh_buckets, similarity.S02_SQL),
+        (similarity.s03_ivf_search, similarity.S03_SQL),
+        (multimodal.m01_payload_meta, multimodal.M01_SQL),
+        (multimodal.m02_decoded_features, multimodal.M02_SQL),
+        (multimodal.m03_cluster_decoded, multimodal.M03_SQL),
+        (windows_batch.w01_tumbling, windows_batch.W01_SQL),
+        (windows_batch.w02_sliding, windows_batch.W02_SQL),
+        (windows_batch.w03_session, windows_batch.W03_SQL),
+        (joins_advanced.j01_asof_last_purchase, joins_advanced.J01_SQL),
+        (joins_advanced.j02_range_join_campaigns, joins_advanced.J02_SQL),
+        (joins_advanced.j03_approx_distinct, joins_advanced.J03_SQL),
+        (joins_advanced.j04_asof_merge_grouped, joins_advanced.J04_SQL),
+        (k01_kmeans_lineitem, K01_SQL),
+        (k02_kmeans_compat, K02_SQL),
+        (k03_kmeans_mllib, K03_SQL),
+        # 51+: append-only
+        (cleaning.c01_decontamination, cleaning.C01_SQL),
+        (cleaning.c02_repetition_signals, cleaning.C02_SQL),
+        (cleaning.c03_pii_scrub, cleaning.C03_SQL),
+        (cleaning.c04_chunking, cleaning.C04_SQL),
+        (cleaning.c05_token_budget_sample, cleaning.C05_SQL),
+        (joins_advanced.j05_approx_percentile, joins_advanced.J05_SQL),
+        (curation.c06_domain_mixture, curation.C06_SQL),
+        (curation.c07_span_dedup, curation.C07_SQL),
+        (curation.c08_unigram_logprob, curation.C08_SQL),
+        (curation.c09_domain_mixture_upsample, curation.C09_SQL),
+        (pq.s04_ivfpq_search, pq.S04_SQL),
+        (sketch.t08_cms_heavy_hitters, sketch.T08_SQL),
+        (pq.s05_ivfpq_residual_search, pq.S05_SQL),
+        (temporal.j06_range_join_binned, temporal.J06_SQL),
+        (temporal.q31_concurrency_histogram, temporal.Q31_SQL),
+        (temporal.q32_coalesced_intervals, temporal.Q32_SQL),
+        (sketch.t09_hll_mergeable, sketch.T09_SQL),
+        (scd.c10_scd2_customer, scd.C10_SQL),
+        (curation.c11_split_assign, curation.C11_SQL),
+        (curation.c12_per_group_topk, curation.C12_SQL),
+        (sketch.t10_theta_setops, sketch.T10_SQL),
+        (sketch.t11_kll_quantiles, sketch.T11_SQL),
+        (quality.v01_data_audit, quality.V01_SQL),
+        (temporal.q33_gapfill_locf, temporal.Q33_SQL),
+        (temporal.q34_funnel, temporal.Q34_SQL),
+        (graph.g01_copurchase_triangles, graph.G01_SQL),
+        (temporal.q35_rolling_7day, temporal.Q35_SQL),
+        (temporal.q36_cohort_retention, temporal.Q36_SQL),
+        (sequences.q37_transition_matrix, sequences.Q37_SQL),
+        (sequences.q38_leading_paths, sequences.Q38_SQL),
+        (graph.q39_copurchase_lift, graph.Q39_SQL),
+        (relational.q40_rfm_segments, relational.Q40_SQL),
+        (search.s06_bm25_search, search.S06_SQL),
+        (sequences.q41_last_touch_attribution, sequences.Q41_SQL),
+        (curation.c13_weighted_sample, curation.C13_SQL),
+        (versioning.c14_snapshot_diff, versioning.C14_SQL),
+        (sketch.t12_bloom_membership, sketch.T12_SQL),
+        (profiling.q42_histogram_cents, profiling.Q42_SQL),
+        (profiling.q43_mad_outliers, profiling.Q43_SQL),
+        (subword.t13_bpe_subword_stats, subword.T13_SQL),
+        (versioning.v02_table_time_travel, versioning.V02_SQL),
+        (multimodal.m04_png_roundtrip, multimodal.M04_SQL),
+        (multimodal.m05_wav_roundtrip, multimodal.M05_SQL),
+        (multimodal.m06_avi_frame_stats, multimodal.M06_SQL),
+        (versioning.v03_bucketed_upsert_time_travel, versioning.V02_SQL),
+        (multimodal.m07_jpeg_decode_stats, multimodal.M07_SQL),
+        (versioning.v04_rebucket_time_travel, versioning.V04_SQL),
+        (multimodal.m08_mjpeg_frame_stats, multimodal.M08_SQL),
+        (ann_index.s07_ann_search_join_parity, ann_index.S07_SQL),
+        (versioning.v05_file_skipping_scan, versioning.V05_SQL),
+        (multimodal.m09_progressive_jpeg_parity, multimodal.M09_SQL),
+        (ann_index.s08_ann_filtered_search_parity, ann_index.S08_SQL),
+        (subword.t14_unigram_subword_stats, subword.T14_SQL),
+        (versioning.v06_in_list_skipping_scan, versioning.V06_SQL),
+        (ann_index.s09_ann_sampled_build_parity, ann_index.S09_SQL),
+        (versioning.v07_schema_evolution, versioning.V07_SQL),
+        (subword.t15_unigram_loss_prune_stats, subword.T15_SQL),
+    )
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES
-
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        name: fn for name, (fn, _sql) in ALL_QUERIES.items()
-    }
-    out["k01_kmeans_lineitem"] = k01_kmeans_lineitem
-    out["k02_kmeans_compat"] = k02_kmeans_compat_customer_shape
-    out["k03_kmeans_mllib"] = k03_kmeans_mllib
-    # entries 51+: round-5 extensions (cleaning ops + approx-percentile)
-    # — outside the driver's 50-entry CORRECTNESS window by construction
-    # (the first 50 are frozen); oracle-verified by the in-repo parity
-    # sweep instead (tests/test_oracle_parity.py).
-    from kmeanwithmapreduce_spark.operators import EXTRA_QUERIES
-
-    for name, (fn, _sql) in EXTRA_QUERIES.items():
-        out[name] = fn
-    return out
+    return {fn.__name__: fn for fn, _ in _entries()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES
-
-    out = {name: sql for name, (_fn, sql) in ALL_QUERIES.items() if sql}
-    out["k01_kmeans_lineitem"] = K01_SQL
-    out["k02_kmeans_compat"] = K02_SQL
-    out["k03_kmeans_mllib"] = K03_SQL
-    from kmeanwithmapreduce_spark.operators import EXTRA_QUERIES
-
-    for name, (_fn, sql) in EXTRA_QUERIES.items():
-        out[name] = sql
-    return out
+    return {fn.__name__: sql for fn, sql in _entries() if sql}

@@ -27,6 +27,121 @@ import time
 import traceback
 
 
+# The timed entries, in run order (a cold pass, then a warm pass).
+HEADLINE = (
+    "q01_pricing_summary",
+    "q03_shipping_priority",
+    "q05_local_supplier_volume",
+    "q09_topk_parts_per_brand",
+    "q10_running_total",
+    "q14_distinct_parts_per_supplier",
+    "q19_sessionization",
+    "w01_tumbling",
+    "t02_quality_score",
+    "d01_exact_dedup",
+    "d02_ngram_jaccard_pairs",
+    "d03_minhash_lsh_pairs",
+    "d04_simhash",
+    "s01_knn_bruteforce",
+    "w03_session",
+    "j01_asof_last_purchase",
+    "q21_custdist",
+    # round-2 additions: one heavy query per previously-unguarded
+    # family (rollup, range join, stats battery, distributed GEMM)
+    "q07_rollup_region_nation_year",
+    "j02_range_join_campaigns",
+    "q24_quantiles_stats",
+    "d05_embedding_neardup_pairs",
+    # round-5 additions: corpus-cleaning ops (BASELINE §G targets)
+    "c01_decontamination",
+    "c02_repetition_signals",
+    "c03_pii_scrub",
+    "c04_chunking",
+    "c05_token_budget_sample",
+    # round-5 curation ops (BASELINE §H targets)
+    "c06_domain_mixture",
+    "c07_span_dedup",
+    "c08_unigram_logprob",
+    # round-5 temporal/sketch/SCD additions (BASELINE §I targets):
+    # j06 is the equi-join re-plan of j02 (same answer — their delta
+    # is the nested-loop vs binned-join cost at the same sf)
+    "j06_range_join_binned",
+    "q31_concurrency_histogram",
+    "q32_coalesced_intervals",
+    "t09_hll_mergeable",
+    "c10_scd2_customer",
+    "c11_split_assign",
+    "c12_per_group_topk",
+    "t10_theta_setops",
+    "t11_kll_quantiles",
+    "v01_data_audit",
+    # round-5 resample/funnel additions (BASELINE §J targets). g01
+    # (triangle census) is NOT a bench entry: its cost is the exact
+    # 40M-wedge materialization (~7.7 s warm at sf0.1) — the s04/t08
+    # exclusion rule; SCALE.md carries its measured sf1 linearity.
+    "q33_gapfill_locf",
+    "q34_funnel",
+    "q35_rolling_7day",
+    "q36_cohort_retention",
+    # round-5 sequence-analysis additions (also §J targets)
+    "q37_transition_matrix",
+    "q38_leading_paths",
+    "q39_copurchase_lift",
+    "q40_rfm_segments",
+    # round-5 fifth-session additions (BASELINE §K targets)
+    "s06_bm25_search",
+    "q41_last_touch_attribution",
+    "c13_weighted_sample",
+    "c14_snapshot_diff",
+    "t12_bloom_membership",
+    "q42_histogram_cents",
+    "q43_mad_outliers",
+    # round-6 additions (BASELINE §L targets): t13 includes BPE
+    # training (word-table agg + driver merge loop) + tokenize;
+    # v02 includes three snapshot writes + the time-travel diff
+    "t13_bpe_subword_stats",
+    "v02_table_time_travel",
+    # round-8 addition (BASELINE §M target): MERGE epochs through the
+    # bucketed upsert table — create + partial-bucket upsert +
+    # rollback + three time-travel reads (e0, e1, current) + SMJ diff
+    "v03_bucketed_upsert_time_travel",
+    # round-9 addition (BASELINE §N target): v03 plus a 4 -> 16
+    # rebucket boundary mid-history and four time-travel reads —
+    # the modulus-evolution storage path, guarded as one number.
+    # m08 (MJPEG decode) is NOT a bench entry: per-item Python codec
+    # kernel cost by construction, the m04/m07 exclusion rule.
+    "v04_rebucket_time_travel",
+    # round-10 addition (BASELINE §O target): file-skipping scan —
+    # snapshot commit with the per-file stats sidecar + pruned range
+    # read; guards the sidecar collection agg AND the pruned-read
+    # plan as one number. m09 (progressive JPEG parity) is NOT a
+    # bench entry: per-item Python codec kernel cost by
+    # construction, the m04/m07/m08 exclusion rule.
+    "v05_file_skipping_scan",
+    # round-11 addition (BASELINE §P target): ANN retrieval-family
+    # guard — fresh IVF-PQ index build over the sf's embeddings +
+    # the serving search AND the distributed search_join at the
+    # fixed 8-cell geometry, with the bit-equality pin inside the
+    # entry. Bounded: 5 queries x top_k 10 at every sf. This is
+    # the one family (s01-s08) that previously had no
+    # BENCH-vs-BASELINE presence.
+    "s07_ann_search_join_parity",
+    # round-12 addition (BASELINE §Q target): additive schema
+    # evolution through the bucketed table — create + an
+    # add-column MERGE + two time-travel reads + the exact-integer
+    # quality aggregate; guards the evolved-read NULL-fill path as
+    # one number. s09 (sampled-build parity) is NOT a bench entry:
+    # its cost is TWO fresh index builds by construction (the
+    # s04/g01 exact-cost exclusion rule) — s07 already guards one
+    # build+search; SCALE.md carries s09's measured build speedup.
+    "v07_schema_evolution",
+    # m04_png_roundtrip is NOT a bench entry: its cost is the
+    # per-item Python PNG encode+decode kernel by construction (the
+    # g01/t08/s04 exact-cost exclusion rule); the codec itself is
+    # timed in SCALE.md-adjacent tests and the oracle sweep.
+)
+
+
 def _timed(timings: dict, errors: dict, name: str, fn, err_key: str | None = None) -> None:
     """Fault-isolated timing: one broken query records an error and the
     run continues — a benchmark harness should degrade, not die (round 3
@@ -79,123 +194,9 @@ def main() -> int:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
+    from __spark_entry__ import queries
 
-    # EXTRA_QUERIES already contains the cleaning/curation dicts
-    ALL_QUERIES = {**ALL_QUERIES, **EXTRA_QUERIES}
-
-    headline = [
-        "q01_pricing_summary",
-        "q03_shipping_priority",
-        "q05_local_supplier_volume",
-        "q09_topk_parts_per_brand",
-        "q10_running_total",
-        "q14_distinct_parts_per_supplier",
-        "q19_sessionization",
-        "w01_tumbling",
-        "t02_quality_score",
-        "d01_exact_dedup",
-        "d02_ngram_jaccard_pairs",
-        "d03_minhash_lsh_pairs",
-        "d04_simhash",
-        "s01_knn_bruteforce",
-        "w03_session",
-        "j01_asof_last_purchase",
-        "q21_custdist",
-        # round-2 additions: one heavy query per previously-unguarded
-        # family (rollup, range join, stats battery, distributed GEMM)
-        "q07_rollup_region_nation_year",
-        "j02_range_join_campaigns",
-        "q24_quantiles_stats",
-        "d05_embedding_neardup_pairs",
-        # round-5 additions: corpus-cleaning ops (BASELINE §G targets)
-        "c01_decontamination",
-        "c02_repetition_signals",
-        "c03_pii_scrub",
-        "c04_chunking",
-        "c05_token_budget_sample",
-        # round-5 curation ops (BASELINE §H targets)
-        "c06_domain_mixture",
-        "c07_span_dedup",
-        "c08_unigram_logprob",
-        # round-5 temporal/sketch/SCD additions (BASELINE §I targets):
-        # j06 is the equi-join re-plan of j02 (same answer — their delta
-        # is the nested-loop vs binned-join cost at the same sf)
-        "j06_range_join_binned",
-        "q31_concurrency_histogram",
-        "q32_coalesced_intervals",
-        "t09_hll_mergeable",
-        "c10_scd2_customer",
-        "c11_split_assign",
-        "c12_per_group_topk",
-        "t10_theta_setops",
-        "t11_kll_quantiles",
-        "v01_data_audit",
-        # round-5 resample/funnel additions (BASELINE §J targets). g01
-        # (triangle census) is NOT a bench entry: its cost is the exact
-        # 40M-wedge materialization (~7.7 s warm at sf0.1) — the s04/t08
-        # exclusion rule; SCALE.md carries its measured sf1 linearity.
-        "q33_gapfill_locf",
-        "q34_funnel",
-        "q35_rolling_7day",
-        "q36_cohort_retention",
-        # round-5 sequence-analysis additions (also §J targets)
-        "q37_transition_matrix",
-        "q38_leading_paths",
-        "q39_copurchase_lift",
-        "q40_rfm_segments",
-        # round-5 fifth-session additions (BASELINE §K targets)
-        "s06_bm25_search",
-        "q41_last_touch_attribution",
-        "c13_weighted_sample",
-        "c14_snapshot_diff",
-        "t12_bloom_membership",
-        "q42_histogram_cents",
-        "q43_mad_outliers",
-        # round-6 additions (BASELINE §L targets): t13 includes BPE
-        # training (word-table agg + driver merge loop) + tokenize;
-        # v02 includes three snapshot writes + the time-travel diff
-        "t13_bpe_subword_stats",
-        "v02_table_time_travel",
-        # round-8 addition (BASELINE §M target): MERGE epochs through the
-        # bucketed upsert table — create + partial-bucket upsert +
-        # rollback + three time-travel reads (e0, e1, current) + SMJ diff
-        "v03_bucketed_upsert_time_travel",
-        # round-9 addition (BASELINE §N target): v03 plus a 4 -> 16
-        # rebucket boundary mid-history and four time-travel reads —
-        # the modulus-evolution storage path, guarded as one number.
-        # m08 (MJPEG decode) is NOT a bench entry: per-item Python codec
-        # kernel cost by construction, the m04/m07 exclusion rule.
-        "v04_rebucket_time_travel",
-        # round-10 addition (BASELINE §O target): file-skipping scan —
-        # snapshot commit with the per-file stats sidecar + pruned range
-        # read; guards the sidecar collection agg AND the pruned-read
-        # plan as one number. m09 (progressive JPEG parity) is NOT a
-        # bench entry: per-item Python codec kernel cost by
-        # construction, the m04/m07/m08 exclusion rule.
-        "v05_file_skipping_scan",
-        # round-11 addition (BASELINE §P target): ANN retrieval-family
-        # guard — fresh IVF-PQ index build over the sf's embeddings +
-        # the serving search AND the distributed search_join at the
-        # fixed 8-cell geometry, with the bit-equality pin inside the
-        # entry. Bounded: 5 queries x top_k 10 at every sf. This is
-        # the one family (s01-s08) that previously had no
-        # BENCH-vs-BASELINE presence.
-        "s07_ann_search_join_parity",
-        # round-12 addition (BASELINE §Q target): additive schema
-        # evolution through the bucketed table — create + an
-        # add-column MERGE + two time-travel reads + the exact-integer
-        # quality aggregate; guards the evolved-read NULL-fill path as
-        # one number. s09 (sampled-build parity) is NOT a bench entry:
-        # its cost is TWO fresh index builds by construction (the
-        # s04/g01 exact-cost exclusion rule) — s07 already guards one
-        # build+search; SCALE.md carries s09's measured build speedup.
-        "v07_schema_evolution",
-        # m04_png_roundtrip is NOT a bench entry: its cost is the
-        # per-item Python PNG encode+decode kernel by construction (the
-        # g01/t08/s04 exact-cost exclusion rule); the codec itself is
-        # timed in SCALE.md-adjacent tests and the oracle sweep.
-    ]
+    qs = queries()
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -207,11 +208,11 @@ def main() -> int:
     _timed({}, errors, "warmup", lambda: _lt(spark, sf_dir, "lineitem").agg({"l_quantity": "sum"}).collect())
 
     def _run_query(name: str) -> None:
-        ALL_QUERIES[name][0](spark, sf_dir).write.format("noop").mode(
+        qs[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
 
-    for name in headline:
+    for name in HEADLINE:
         _timed(timings, errors, name, lambda: _run_query(name))
 
     # second pass: steady-state cost with codegen/classloading amortized —
@@ -219,7 +220,7 @@ def main() -> int:
     # a separate key; the headline "queries" stay cold-run for
     # comparability with the frozen BASELINE §C/§D/§E targets.
     timings_warm: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         _timed(
             timings_warm, errors, name, lambda: _run_query(name),
             err_key=f"warm:{name}",

@@ -995,26 +995,6 @@ SELECT CAST(1 AS BIGINT) AS searches_equal,
        CAST(1 AS BIGINT) AS recall_band_ok
 """
 
-ANN_INDEX_QUERIES = {
-    "s07_ann_search_join_parity": (s07_ann_search_join_parity, S07_SQL),
-}
-
-# registered LAST (operators/__init__) so s07/v05/m09 keep their
-# registry positions — the order-pin tail appends, never reorders
-ANN_FILTER_QUERIES = {
-    "s08_ann_filtered_search_parity": (
-        s08_ann_filtered_search_parity,
-        S08_SQL,
-    ),
-}
-
-ANN_SAMPLED_QUERIES = {
-    "s09_ann_sampled_build_parity": (
-        s09_ann_sampled_build_parity,
-        S09_SQL,
-    ),
-}
-
 
 def _pq_sample_error(
     vectors: DataFrame,

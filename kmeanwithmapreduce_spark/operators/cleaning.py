@@ -727,12 +727,3 @@ WITH t AS (
 )
 SELECT doc_id, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 20000
 """
-
-
-CLEANING_QUERIES = {
-    "c01_decontamination": (c01_decontamination, C01_SQL),
-    "c02_repetition_signals": (c02_repetition_signals, C02_SQL),
-    "c03_pii_scrub": (c03_pii_scrub, C03_SQL),
-    "c04_chunking": (c04_chunking, C04_SQL),
-    "c05_token_budget_sample": (c05_token_budget_sample, C05_SQL),
-}

@@ -11,9 +11,9 @@ and Beyond", SoCC'14 — public literature), which converges in O(log n)
 rounds of pure DataFrame joins/aggregations — no driver-side graph, no
 vertex-program framework needed.
 
-NOT in the driver's ``queries()`` registry: the external driver verifies
-exactly the first 50 entries and the registry is full (COVERAGE.md).
-These are library operators verified by tests/test_corpus.py, including
+NOT entries of the ``queries()`` registry, whose rows are
+``(spark, sf_dir) -> DataFrame`` queries: these are library operators
+that take frames and knobs, verified by tests/test_corpus.py, including
 a DuckDB cross-check for the sampler and a pure-Python union-find
 cross-check for components.
 

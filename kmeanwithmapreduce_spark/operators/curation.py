@@ -60,7 +60,6 @@ def _u32_draw(key_col, salt: str):
     )
 
 
-
 def _token_table(docs, id_col, source_col, text_col, tokenizer):
     """(id, source, n_tokens) for the mixture ops: whitespace-token
     expr by default (oracle-parity path), or Arrow-batched BPE counts
@@ -881,21 +880,6 @@ WHERE rk <= {_C12_K}
 """
 
 
-CURATION_QUERIES = {
-    "c06_domain_mixture": (c06_domain_mixture, C06_SQL),
-    "c07_span_dedup": (c07_span_dedup, C07_SQL),
-    "c08_unigram_logprob": (c08_unigram_logprob, C08_SQL),
-    "c09_domain_mixture_upsample": (c09_domain_mixture_upsample, C09_SQL),
-}
-
-# c11/c12 register at the END of EXTRA_QUERIES (operators/__init__.py)
-# — registry positions are append-only.
-SPLIT_QUERIES = {
-    "c11_split_assign": (c11_split_assign, C11_SQL),
-    "c12_per_group_topk": (c12_per_group_topk, C12_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # c13 — deterministic weighted sampling without replacement
 # (Efraimidis–Spirakis A-ES, Inf. Proc. Letters 97(5), 2006): each row
@@ -970,8 +954,3 @@ FROM documents
 ORDER BY es_key DESC, doc_id
 LIMIT {_C13_K}
 """
-
-
-WEIGHTED_SAMPLE_QUERIES = {
-    "c13_weighted_sample": (c13_weighted_sample, C13_SQL),
-}

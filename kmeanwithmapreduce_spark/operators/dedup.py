@@ -566,12 +566,3 @@ FROM (
 )
 WHERE cosine >= {_COSINE_DUP_THRESHOLD}
 """
-
-
-DEDUP_QUERIES = {
-    "d01_exact_dedup": (d01_exact_dedup, D01_SQL),
-    "d02_ngram_jaccard_pairs": (d02_ngram_jaccard_pairs, D02_SQL),
-    "d03_minhash_lsh_pairs": (d03_minhash_lsh_pairs, D03_SQL),
-    "d04_simhash": (d04_simhash, D04_SQL),
-    "d05_embedding_neardup_pairs": (d05_embedding_neardup_pairs, D05_SQL),
-}

@@ -301,10 +301,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
        (SELECT CAST(c AS BIGINT) FROM tri) AS n_triangles
 """
 
-GRAPH_QUERIES = {
-    "g01_copurchase_triangles": (g01_copurchase_triangles, G01_SQL),
-}
-
 
 # --------------------------------------------------------------------------
 # q39 — market-basket association metrics over the same co-purchase
@@ -413,7 +409,3 @@ JOIN item_counts c2 ON p2 = c2.node
 ORDER BY n_ab DESC, p1, p2
 LIMIT 20
 """
-
-BASKET_QUERIES = {
-    "q39_copurchase_lift": (q39_copurchase_lift, Q39_SQL),
-}

@@ -324,11 +324,3 @@ SELECT l_returnflag,
 FROM lineitem
 GROUP BY l_returnflag
 """
-
-
-ADVANCED_JOIN_QUERIES = {
-    "j01_asof_last_purchase": (j01_asof_last_purchase, J01_SQL),
-    "j02_range_join_campaigns": (j02_range_join_campaigns, J02_SQL),
-    "j03_approx_distinct": (j03_approx_distinct, J03_SQL),
-    "j04_asof_merge_grouped": (j04_asof_merge_grouped, J04_SQL),
-}

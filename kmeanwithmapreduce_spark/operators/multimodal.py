@@ -366,13 +366,6 @@ FROM (
 """
 
 
-MULTIMODAL_QUERIES = {
-    "m01_payload_meta": (m01_payload_meta, M01_SQL),
-    "m02_decoded_features": (m02_decoded_features, M02_SQL),
-    "m03_cluster_decoded": (m03_cluster_decoded, M03_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # m04 — REAL PNG decode, oracle-verified. Each document's first 256
 # utf-8 bytes (zero-padded) become a 16x16 grayscale image, PNG-encoded
@@ -442,11 +435,6 @@ FROM (
   FROM documents
 )
 """
-
-
-PNG_QUERIES = {
-    "m04_png_roundtrip": (m04_png_roundtrip, M04_SQL),
-}
 
 
 # --------------------------------------------------------------------------
@@ -615,11 +603,6 @@ FROM s
 """
 
 
-WAV_QUERIES = {
-    "m05_wav_roundtrip": (m05_wav_roundtrip, M05_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # m06 — REAL AVI video decode, oracle-verified. Each doc's first 60
 # bytes become two 5x2 RGB frames (width 5 exercises the DIB 4-byte
@@ -720,11 +703,6 @@ FROM (
   FROM b
 )
 """
-
-
-AVI_QUERIES = {
-    "m06_avi_frame_stats": (m06_avi_frame_stats, M06_SQL),
-}
 
 
 # --------------------------------------------------------------------------
@@ -833,11 +811,6 @@ FROM (
 """
 
 
-JPEG_QUERIES = {
-    "m07_jpeg_decode_stats": (m07_jpeg_decode_stats, M07_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # m09 — PROGRESSIVE JPEG decode parity (round 10; functions/jpeg.py
 # §G machinery): each document's first 768 utf-8 bytes become a
@@ -889,11 +862,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_images,
        CAST(1 AS BIGINT) AS all_equal
 FROM documents
 """
-
-
-PROG_JPEG_QUERIES = {
-    "m09_progressive_jpeg_parity": (m09_progressive_jpeg_parity, M09_SQL),
-}
 
 
 # --------------------------------------------------------------------------
@@ -1041,8 +1009,3 @@ FROM (
   WHERE (SELECT c FROM fp) = 5000 AND (SELECT nb FROM fp) = 1485576
 )
 """
-
-
-MJPEG_QUERIES = {
-    "m08_mjpeg_frame_stats": (m08_mjpeg_frame_stats, M08_SQL),
-}

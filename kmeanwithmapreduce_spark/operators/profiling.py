@@ -171,9 +171,3 @@ SELECT dev.g AS event_type,
 FROM dev JOIN mad USING (g)
 GROUP BY dev.g
 """
-
-
-PROFILE_QUERIES = {
-    "q42_histogram_cents": (q42_histogram_cents, Q42_SQL),
-    "q43_mad_outliers": (q43_mad_outliers, Q43_SQL),
-}

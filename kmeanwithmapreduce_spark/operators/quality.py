@@ -151,8 +151,3 @@ FROM (
           FROM lineitem)
 )
 """
-
-
-QUALITY_QUERIES = {
-    "v01_data_audit": (v01_data_audit, V01_SQL),
-}

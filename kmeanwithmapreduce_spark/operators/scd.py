@@ -175,8 +175,3 @@ UNION ALL
 SELECT -(k + 1), 'NEW', TIMESTAMP '{_T1}', NULL, TRUE
 FROM cur WHERE k % 100 = 7            -- brand-new keys (negative space)
 """
-
-
-SCD_QUERIES = {
-    "c10_scd2_customer": (c10_scd2_customer, C10_SQL),
-}

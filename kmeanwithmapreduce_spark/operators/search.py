@@ -168,8 +168,3 @@ WHERE score > 0
 ORDER BY score DESC, doc_id
 LIMIT {_S06_K}
 """
-
-
-SEARCH_QUERIES = {
-    "s06_bm25_search": (s06_bm25_search, S06_SQL),
-}

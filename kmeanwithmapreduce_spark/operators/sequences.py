@@ -167,13 +167,3 @@ FROM touched
 WHERE event_type = 'purchase'
 GROUP BY coalesce(touch, 'direct')
 """
-
-
-SEQUENCE_QUERIES = {
-    "q37_transition_matrix": (q37_transition_matrix, Q37_SQL),
-    "q38_leading_paths": (q38_leading_paths, Q38_SQL),
-}
-
-ATTRIBUTION_QUERIES = {
-    "q41_last_touch_attribution": (q41_last_touch_attribution, Q41_SQL),
-}

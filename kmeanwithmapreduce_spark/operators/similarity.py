@@ -358,10 +358,3 @@ FROM (
   WHERE (SELECT c FROM nrows) = 600000
 )
 """
-
-
-SIMILARITY_QUERIES = {
-    "s01_knn_bruteforce": (s01_knn_bruteforce, S01_SQL),
-    "s02_lsh_buckets": (s02_lsh_buckets, S02_SQL),
-    "s03_ivf_search": (s03_ivf_search, S03_SQL),
-}

@@ -319,15 +319,6 @@ GROUP BY event_type
 """
 
 
-# t09 registers separately in operators/__init__.py, in append-only
-# order after the temporal entries — registry positions are
-# append-only so the documented positions of earlier entries never
-# shift (later rounds keep appending after it).
-SKETCH_QUERIES = {
-    "t08_cms_heavy_hitters": (t08_cms_heavy_hitters, T08_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # t10 — theta sketches: SET-OPERATION cardinality (DataSketches theta;
 # Dasgupta et al., "Theta-join of data sketches"). HLL (t09) only
@@ -766,8 +757,3 @@ SELECT CAST(count(*) AS BIGINT) AS n_probes,
           <= (count(*) - sum(m))) AS fp_within_band
 FROM joined
 """
-
-
-BLOOM_QUERIES = {
-    "t12_bloom_membership": (t12_bloom_membership, T12_SQL),
-}

@@ -95,11 +95,6 @@ FROM (
 """
 
 
-SUBWORD_QUERIES = {
-    "t13_bpe_subword_stats": (t13_bpe_subword_stats, T13_SQL),
-}
-
-
 # ---------------------------------------------------------------------------
 # t14 — unigram-LM (SentencePiece-style) subword tokenization
 
@@ -176,11 +171,6 @@ FROM (
   WHERE (SELECT c FROM nchars) = 1485576
 )
 """
-
-
-UNIGRAM_QUERIES = {
-    "t14_unigram_subword_stats": (t14_unigram_subword_stats, T14_SQL),
-}
 
 
 # ---------------------------------------------------------------------------
@@ -275,8 +265,3 @@ FROM (
   WHERE (SELECT c FROM nchars) = 1485576
 )
 """
-
-
-UNIGRAM_LOSS_QUERIES = {
-    "t15_unigram_loss_prune_stats": (t15_unigram_loss_prune_stats, T15_SQL),
-}

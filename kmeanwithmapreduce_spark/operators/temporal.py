@@ -439,18 +439,6 @@ SELECT CAST(4 AS INT), 'purchase', (SELECT CAST(count(*) AS BIGINT) FROM s4)
 """
 
 
-TEMPORAL_QUERIES = {
-    "j06_range_join_binned": (j06_range_join_binned, J06_SQL),
-    "q31_concurrency_histogram": (q31_concurrency_histogram, Q31_SQL),
-    "q32_coalesced_intervals": (q32_coalesced_intervals, Q32_SQL),
-}
-
-RESAMPLE_QUERIES = {
-    "q33_gapfill_locf": (q33_gapfill_locf, Q33_SQL),
-    "q34_funnel": (q34_funnel, Q34_SQL),
-}
-
-
 # --------------------------------------------------------------------------
 # q35 — rolling 7-day window feature: per event, this user's event
 # count and grid-exact value sum over [ts - 7d, ts] — a RANGE frame
@@ -553,9 +541,3 @@ SELECT CAST(floor(date_diff('day', DATE '2024-01-01', f) / 7.0) AS BIGINT)
 FROM days JOIN firsts ON days.user_id = firsts.user_id
 GROUP BY 1, 2
 """
-
-
-ROLLING_QUERIES = {
-    "q35_rolling_7day": (q35_rolling_7day, Q35_SQL),
-    "q36_cohort_retention": (q36_cohort_retention, Q36_SQL),
-}

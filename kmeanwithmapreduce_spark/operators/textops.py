@@ -446,14 +446,3 @@ FROM (
   WHERE (SELECT c FROM nrows) = 600000
 )
 """
-
-
-TEXT_QUERIES = {
-    "t01_doc_stats": (t01_doc_stats, T01_SQL),
-    "t02_quality_score": (t02_quality_score, T02_SQL),
-    "t03_language_id": (t03_language_id, T03_SQL),
-    "t04_fingerprint": (t04_fingerprint, T04_SQL),
-    "t05_tfidf_top_terms": (t05_tfidf_top_terms, T05_SQL),
-    "t07_tfidf_hashed_features": (t07_tfidf_hashed_features, T07_SQL),
-    "t06_tfidf_kmeans": (t06_tfidf_kmeans, T06_SQL),
-}

@@ -622,34 +622,3 @@ SELECT 'q_cents',
        CAST((SELECT coalesce(sum(doc_id % 100), 0) FROM documents
              WHERE doc_id % 7 = 0) AS BIGINT)
 """
-
-
-SCHEMA_EVOLUTION_QUERIES = {
-    "v07_schema_evolution": (v07_schema_evolution, V07_SQL),
-}
-
-
-SKIPPING_QUERIES = {
-    "v05_file_skipping_scan": (v05_file_skipping_scan, V05_SQL),
-}
-
-IN_SKIPPING_QUERIES = {
-    "v06_in_list_skipping_scan": (v06_in_list_skipping_scan, V06_SQL),
-}
-
-
-VERSIONING_QUERIES = {
-    "c14_snapshot_diff": (c14_snapshot_diff, C14_SQL),
-}
-
-REBUCKET_QUERIES = {
-    "v04_rebucket_time_travel": (v04_rebucket_time_travel, V04_SQL),
-}
-
-TIME_TRAVEL_QUERIES = {
-    "v02_table_time_travel": (v02_table_time_travel, V02_SQL),
-}
-
-UPSERT_QUERIES = {
-    "v03_bucketed_upsert_time_travel": (v03_bucketed_upsert_time_travel, V02_SQL),
-}

@@ -107,10 +107,3 @@ SELECT user_id, min(ts) AS session_start, count(*) AS n_events
 FROM sess
 GROUP BY user_id, session_id
 """
-
-
-WINDOW_QUERIES = {
-    "w01_tumbling": (w01_tumbling, W01_SQL),
-    "w02_sliding": (w02_sliding, W02_SQL),
-    "w03_session": (w03_session, W03_SQL),
-}

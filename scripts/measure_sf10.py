@@ -21,10 +21,10 @@ def main() -> None:
     spark = get_spark("sf10", shuffle_partitions=64)
     from pyspark.sql import functions as F
 
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
+    from __spark_entry__ import queries
     from kmeanwithmapreduce_spark.sources.readers import load_table
 
-    qs = {**ALL_QUERIES, **EXTRA_QUERIES}
+    qs = queries()
     names = [
         "q01_pricing_summary",
         "q03_shipping_priority",
@@ -44,7 +44,7 @@ def main() -> None:
         for _ in range(2):
             t0 = time.time()
             try:
-                qs[name][0](spark, sf).write.format("noop").mode(
+                qs[name](spark, sf).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 ts.append(round(time.time() - t0, 1))

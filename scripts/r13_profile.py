@@ -43,9 +43,9 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
+    from __spark_entry__ import queries
 
-    Q = {**ALL_QUERIES, **EXTRA_QUERIES}
+    Q = queries()
 
     default = [
         "s07_ann_search_join_parity",
@@ -117,7 +117,7 @@ def main() -> int:
             finally:
                 shutil.rmtree(td, ignore_errors=True)
         else:
-            Q[name][0](spark, sf_dir).write.format("noop").mode(
+            Q[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
         timings[name] = round(time.monotonic() - t0, 3)

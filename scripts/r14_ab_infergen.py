@@ -50,12 +50,12 @@ def main() -> int:
     spark = get_spark("r14_ab")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
+    from __spark_entry__ import queries
 
-    Q = {**ALL_QUERIES, **EXTRA_QUERIES}
+    Q = queries()
 
     def run_once(name: str, excluded: bool) -> float:
-        df = Q[name][0](spark, sf_dir)  # load_table re-sets the exclusion
+        df = Q[name](spark, sf_dir)  # load_table re-sets the exclusion
         spark.conf.set(
             "spark.sql.optimizer.excludedRules", _RULE if excluded else ""
         )

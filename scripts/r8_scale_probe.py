@@ -31,8 +31,8 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
+    from __spark_entry__ import queries
     from kmeanwithmapreduce_spark.functions.bpe import bpe_count_col, train_bpe
-    from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
     from kmeanwithmapreduce_spark.operators.corpus_incremental import (
         ingest_corpus_wave,
     )
@@ -41,12 +41,12 @@ def main() -> int:
 
     spark = get_spark("r8probe")
     spark.sparkContext.setLogLevel("ERROR")
-    Q = {**ALL_QUERIES, **EXTRA_QUERIES}
+    Q = queries()
     out: dict = {"load_start": round(os.getloadavg()[0], 2)}
 
     def t_entry(name: str, sf: str) -> float:
         t0 = time.monotonic()
-        Q[name][0](spark, sf).write.format("noop").mode("overwrite").save()
+        Q[name](spark, sf).write.format("noop").mode("overwrite").save()
         return round(time.monotonic() - t0, 2)
 
     # untimed warmup so the first timed entry doesn't absorb classloading

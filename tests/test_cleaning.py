@@ -1,7 +1,7 @@
 """Corpus-cleaning operators (operators/cleaning.py): library-level
 semantics on constructed inputs, plan shape (broadcast decontamination
-join, shuffle-free scrubbing), and the registry-window invariant that
-cleaning entries must never displace the driver's frozen first-50."""
+join, shuffle-free scrubbing). Their registry position is pinned with
+the full order in tests/test_entry_contract.py."""
 
 from __future__ import annotations
 
@@ -347,84 +347,3 @@ def test_token_budget_sample_no_global_single_partition_sort(spark, sf_dir):
         .toString()
     )
     assert "SinglePartition" not in plan, plan
-
-
-# --------------------------------------------------------------------------
-# registry window invariant
-
-
-def test_cleaning_entries_sit_after_driver_window():
-    """The driver verifies the FIRST 50 queries() entries; c01-c03 must
-    append after k03 and never displace or reorder that frozen window."""
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    first50 = names[:50]
-    assert first50[-3:] == [
-        "k01_kmeans_lineitem",
-        "k02_kmeans_compat",
-        "k03_kmeans_mllib",
-    ]
-    assert names[50:] == [
-        "c01_decontamination",
-        "c02_repetition_signals",
-        "c03_pii_scrub",
-        "c04_chunking",
-        "c05_token_budget_sample",
-        "j05_approx_percentile",
-        "c06_domain_mixture",
-        "c07_span_dedup",
-        "c08_unigram_logprob",
-        "c09_domain_mixture_upsample",
-        "s04_ivfpq_search",
-        "t08_cms_heavy_hitters",
-        "s05_ivfpq_residual_search",
-        "j06_range_join_binned",
-        "q31_concurrency_histogram",
-        "q32_coalesced_intervals",
-        "t09_hll_mergeable",
-        "c10_scd2_customer",
-        "c11_split_assign",
-        "c12_per_group_topk",
-        "t10_theta_setops",
-        "t11_kll_quantiles",
-        "v01_data_audit",
-        "q33_gapfill_locf",
-        "q34_funnel",
-        "g01_copurchase_triangles",
-        "q35_rolling_7day",
-        "q36_cohort_retention",
-        "q37_transition_matrix",
-        "q38_leading_paths",
-        "q39_copurchase_lift",
-        "q40_rfm_segments",
-        "s06_bm25_search",
-        "q41_last_touch_attribution",
-        "c13_weighted_sample",
-        "c14_snapshot_diff",
-        "t12_bloom_membership",
-        "q42_histogram_cents",
-        "q43_mad_outliers",
-        "t13_bpe_subword_stats",
-        "v02_table_time_travel",
-        "m04_png_roundtrip",
-        "m05_wav_roundtrip",
-        "m06_avi_frame_stats",
-        "v03_bucketed_upsert_time_travel",
-        "m07_jpeg_decode_stats",
-        "v04_rebucket_time_travel",
-        "m08_mjpeg_frame_stats",
-        "s07_ann_search_join_parity",
-        "v05_file_skipping_scan",
-        "m09_progressive_jpeg_parity",
-        "s08_ann_filtered_search_parity",
-        "t14_unigram_subword_stats",
-        "v06_in_list_skipping_scan",
-        "s09_ann_sampled_build_parity",
-        "v07_schema_evolution",
-        "t15_unigram_loss_prune_stats",
-    ]
-    # every cleaning entry carries an oracle
-    sqls = entry.oracle_sql()
-    for n in names[50:]:
-        assert n in sqls

@@ -2,7 +2,7 @@
 rule + DuckDB twin), span-level dedup (C4-style first-occurrence
 ownership), and unigram-LM quality scoring — unit semantics, plan
 shape, and determinism. The full c06/c07/c08 oracle parity runs in
-tests/test_oracle_parity.py via EXTRA_QUERIES."""
+the ORACLE_CASES sweep of tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -208,19 +208,6 @@ def test_unigram_logprob_vocab_is_broadcast(spark, sf_dir):
         .toString()
     )
     assert "BroadcastHashJoin" in plan
-
-
-# --------------------------------------------------------------------------
-# registry placement
-
-
-def test_curation_entries_sit_after_driver_window():
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    for n in ("c06_domain_mixture", "c07_span_dedup", "c08_unigram_logprob"):
-        assert n in names and names.index(n) >= 50
-        assert n in entry.oracle_sql()
 
 
 # --------------------------------------------------------------------------

@@ -9,31 +9,28 @@ import math
 import pandas as pd
 import pytest
 
-from kmeanwithmapreduce_spark.operators import ALL_QUERIES, EXTRA_QUERIES
+import __spark_entry__ as entry
 
-# EXTRA_QUERIES sit past the driver's 50-entry window, so this
-# in-repo sweep is their primary oracle gate — same discipline.
+# test_entry_contract.py checks these three exactly, stricter than rel=1e-9.
+_CHECKED_EXACTLY = ("k01_kmeans_lineitem", "k02_kmeans_compat", "k03_kmeans_mllib")
+
+_SQL = entry.oracle_sql()
+
+# Entries 51+ sit past the driver's 50-entry window, so this in-repo
+# sweep is their primary oracle gate — same discipline.
 ORACLE_CASES = [
-    (n, fn, sql)
-    for n, (fn, sql) in {**ALL_QUERIES, **EXTRA_QUERIES}.items()
-    if sql
+    (n, fn, _SQL[n])
+    for n, fn in entry.queries().items()
+    if n in _SQL and n not in _CHECKED_EXACTLY
 ]
 
-
-def _rows_only_cases():
-    """Registry entries with no oracle. EMPTY since round 6: k01 gained
-    a hash-ordered-init golden-row oracle in round 5 and k03 moved to
-    layout-invariant derived facts (total rows / cluster count / banded
-    WSSE) with a VALUES oracle in round 6, so every queries() entry is
-    value-checked. Kept as a live guard: any future entry registered
-    without an oracle lands here and still gets a rows-run smoke."""
-    import __spark_entry__ as entry
-
-    sqls = entry.oracle_sql()
-    return [(n, fn) for n, fn in entry.queries().items() if n not in sqls]
-
-
-ROWS_ONLY_CASES = _rows_only_cases()
+# Registry entries with no oracle. EMPTY since round 6: k01 gained a
+# hash-ordered-init golden-row oracle in round 5 and k03 moved to
+# layout-invariant derived facts (total rows / cluster count / banded
+# WSSE) with a VALUES oracle in round 6, so every queries() entry is
+# value-checked. Kept as a live guard: any future entry registered
+# without an oracle lands here and still gets a rows-run smoke.
+ROWS_ONLY_CASES = [(n, fn) for n, fn in entry.queries().items() if n not in _SQL]
 
 
 def test_every_entry_is_oracle_backed():

@@ -107,10 +107,15 @@ def test_d05_distributed_no_driver_collect(spark, sf_dir):
 
 
 def test_no_python_udfs_in_relational_plans(spark, sf_dir):
-    for name, (fn, _sql) in R.RELATIONAL_QUERIES.items():
+    import __spark_entry__ as entry
+
+    relational = entry._entries()[:22]  # q01-q30: the relational family
+    assert len(relational) == 22
+    assert {fn.__module__ for fn, _sql in relational} == {R.__name__}
+    for fn, _sql in relational:
         plan = explain_str(fn(spark, sf_dir))
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, fn.__name__
+        assert "ArrowEvalPython" not in plan, fn.__name__
 
 
 def test_j04_chunked_plan(spark, sf_dir):

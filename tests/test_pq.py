@@ -151,14 +151,6 @@ def test_ivfpq_probes_bound_candidates(spark, sf_dir):
     assert all(len(cs) == 1 for cs in probed.values())
 
 
-def test_s04_entry_sits_after_driver_window():
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    assert "s04_ivfpq_search" in names and names.index("s04_ivfpq_search") >= 50
-    assert "s04_ivfpq_search" in entry.oracle_sql()
-
-
 def test_by_residual_improves_recall_at_same_bits(spark, sf_dir):
     """FAISS IVFPQ's by_residual=true at the s04 bit budget (m=4, k=16):
     quantizing residuals to the coarse centroid must beat quantizing raw
@@ -185,11 +177,3 @@ def test_by_residual_improves_recall_at_same_bits(spark, sf_dir):
     raw, res = spark_recall(False), spark_recall(True)
     assert res > raw
     assert res >= 0.3  # measured 0.42; generous floor
-
-
-def test_s05_entry_sits_after_driver_window():
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    assert names.index("s05_ivfpq_residual_search") >= 50
-    assert "s05_ivfpq_residual_search" in entry.oracle_sql()

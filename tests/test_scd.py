@@ -1,7 +1,7 @@
 """SCD2 merge (operators/scd.py): version-chaining semantics on
 hand-computed batches, invariants on the real customer dim, and the
 broadcast-only plan pin. DuckDB value parity for the c10 registry entry
-is covered by the ORACLE_CASES sweep (it is an EXTRA_QUERIES entry)."""
+is covered by the ORACLE_CASES sweep in test_oracle_parity.py."""
 
 from __future__ import annotations
 

@@ -2,7 +2,7 @@
 transition/path cases on constructed streams, the total-order
 (ts, event_id) tie rule, and scale plan pins (user-keyed windows,
 WindowGroupLimit for the rank<=k path prefix). DuckDB value parity is
-covered by the ORACLE_CASES sweep (they are EXTRA_QUERIES)."""
+covered by the ORACLE_CASES sweep in test_oracle_parity.py."""
 
 from __future__ import annotations
 

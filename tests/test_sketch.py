@@ -103,14 +103,6 @@ def test_heavy_hitters_two_pass_contract(spark, sf_dir):
     assert all(r.exact_cnt == exact[g] and r.est >= r.exact_cnt for g, r in out.items())
 
 
-def test_sketch_entry_sits_after_driver_window():
-    import __spark_entry__ as entry
-
-    names = list(entry.queries())
-    assert names.index("t08_cms_heavy_hitters") >= 50
-    assert "t08_cms_heavy_hitters" in entry.oracle_sql()
-
-
 def test_streaming_cms_accumulates_to_batch_sketch(spark, sf_dir, tmp_path):
     """Grams arrive in two micro-batches (availableNow +
     maxFilesPerTrigger=1); each epoch persists its own grid and the

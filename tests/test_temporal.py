@@ -2,7 +2,7 @@
 range join's equivalence to the nested-loop form and its scale-shape
 plan pin, plus hand-computed sweep-line and island-coalescing cases.
 DuckDB value parity for all three registry entries is covered by the
-ORACLE_CASES sweep in test_oracle_parity.py (they are EXTRA_QUERIES)."""
+ORACLE_CASES sweep in test_oracle_parity.py."""
 
 from __future__ import annotations
 
